@@ -287,23 +287,6 @@ def simhash_col(hash_array: Column, n_bits: int = SIMHASH_BITS) -> Column:
     return out.cast("bigint")
 
 
-def minhash_signature_wide(sh: DataFrame,
-                           id_cols: Sequence[str]) -> DataFrame:
-    """(id_cols, mh0..mh{N-1}): all N_PERM minhashes in ONE groupBy with
-    N min-aggregate columns — no ×N_PERM explode, no N·|shingles| row
-    shuffle. This is the scale formulation: shuffle volume equals the
-    shingle count, and map-side partial MIN does the rest.
-    """
-    ids = list(id_cols)
-    # Project the shingle hash ONCE; inlining it into each MIN would
-    # re-evaluate the ascii/substring chain N_PERM times per row.
-    hashed = sh.select(*ids, shingle_hash(F.col("shingle")).alias("h"))
-    return hashed.groupBy(*ids).agg(*[
-        F.min((F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i])) % MOD)
-        .alias(f"mh{i}")
-        for i in range(N_PERM)])
-
-
 def band_signatures_wide(sig_wide: DataFrame,
                          id_cols: Sequence[str]) -> DataFrame:
     """(id_cols, band, band_sig) from the wide signature — a 4-element
@@ -320,18 +303,6 @@ def band_signatures_wide(sig_wide: DataFrame,
     return sig_wide.select(*ids, bands).select(
         *ids, F.col("bb.band").alias("band"),
         F.col("bb.band_sig").alias("band_sig"))
-
-
-def band_signatures(sig: DataFrame, id_cols: Sequence[str]) -> DataFrame:
-    """(id_cols, band, band_sig): LSH band signature strings — documents
-    sharing any (band, band_sig) bucket are near-dup candidates."""
-    ids = list(id_cols)
-    banded = sig.withColumn("band", (F.col("i") / ROWS_PER_BAND).cast("int"))
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("i", "mh"))),
-        lambda s: s["mh"].cast("string"))
-    return banded.groupBy(*ids, "band").agg(
-        F.concat_ws("-", ordered).alias("band_sig"))
 
 
 def simhash(df: DataFrame, id_cols: Sequence[str], token_col: str = "token",

@@ -8,29 +8,39 @@ translator steps are declarative path remaps driven by YAML templates
 (src/processstep_translator_step_1.py:33-43,
 src/processstep_translator_step_2.py:33-43).
 
-Spark design: Spark has no native HDF5 reader, so ingestion is a
-``mapInPandas`` over the file manifest — each task opens its partition's
-files with h5py and emits one flat row per file. From there on
+Spark design: Spark has no native HDF5 reader, so every front-end —
+``ingest_hdf5`` (a ``mapInPandas`` over the file manifest) and both
+readers of the "nexus" DataSource — turns a repetition file into a row
+through one function here, :func:`read_repetition` (open via
+:func:`open_h5`, :func:`flatten_tree`, close). From there on
 everything is columnar Parquet. The path→column mapping is an explicit
 ``HDF5Mapping`` (the engine's replacement for the reference's YAML
 translator templates + per-step path dicts), and the defensive
 coercions are reproduced exactly because downstream physics branches on
 the sentinels (SURVEY.md §1.2).
 
-h5py is not available in every environment (not in this container):
-the reader is import-gated, and ``read_h5_value`` accepts a plain-dict
-fake tree so the flattening/coercion logic is fully testable without
-the library.
+h5py is an optional dependency (the ``[hdf5]`` extra): the reader is
+import-gated, and ``read_h5_value`` accepts a plain-dict fake tree so
+the flattening/coercion logic is fully testable without the library.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator, Mapping
-from dataclasses import dataclass, field
+import contextlib
+import json
+import os
+import re
+from collections.abc import Iterator, Mapping
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from mousedatapipeline_spark.sources.manifest import (
+    DIR_KEY_REGEX,
+    REPETITION_KEYS,
+)
 
 try:  # pragma: no cover - exercised only where h5py is installed
     import h5py  # type: ignore
@@ -38,14 +48,35 @@ except ImportError:  # pragma: no cover
     h5py = None
 
 
+# A URI scheme prefix (file:, hdfs:, s3a:).
+_SCHEME = re.compile(r"([A-Za-z][A-Za-z0-9+.-]*):")
+# The key triple at the END of a file stem (prefixes like MOUSE_ pass).
+_STEM_KEYS = re.compile(DIR_KEY_REGEX + "$")
+
+
 def open_h5(path: str):
-    """Open an HDF5 file for reading: h5py when installed (full-format
+    """Open one repetition file for reading, as a context manager over
+    the traversal surface ``flatten_tree`` consumes.
+
+    ``path`` is a local path or a ``file:`` path as Spark's
+    ``binaryFile`` listing emits it (Hadoop ``Path.toString()``, which
+    is not percent-encoded: the scheme is stripped and nothing is
+    decoded). Any other scheme (``hdfs:``, ``s3a:``) raises
+    ``ValueError``. ``.json`` files load as the nested-dict fake tree
+    (logic fixtures). HDF5 opens via h5py when installed (full-format
     coverage), else the vendored classic-format reader
     (:mod:`.minihdf5` — the libhdf5-default subset, which is all the
     reference's per-repetition files use; anything fancier raises
-    ``UnsupportedHDF5Feature`` loudly). Both returns support the same
-    traversal surface ``flatten_tree`` consumes and both are context
-    managers."""
+    ``UnsupportedHDF5Feature`` loudly)."""
+    m = _SCHEME.match(path)
+    if m:
+        if m.group(1) != "file":
+            raise ValueError(f"cannot open {path!r}: only local paths "
+                             "and file: paths are supported")
+        path = path[m.end():]
+    if path.endswith(".json"):
+        with open(path, encoding="utf-8") as f:
+            return contextlib.nullcontext(json.load(f))
     if h5py is not None:  # pragma: no cover - h5py absent here
         return h5py.File(path, "r")
     from mousedatapipeline_spark.sources.minihdf5 import MiniH5File
@@ -83,16 +114,13 @@ class HDF5Mapping:
 
 @dataclass(frozen=True)
 class IngestSchema:
-    """A set of mappings plus the repetition key columns."""
+    """A set of mappings; rows are keyed by ``REPETITION_KEYS``."""
     mappings: tuple[HDF5Mapping, ...]
-    key_columns: tuple[str, ...] = ("ymd", "batch", "repetition")
 
     def spark_schema(self) -> T.StructType:
-        keys = [
-            T.StructField("ymd", T.StringType(), False),
-            T.StructField("batch", T.IntegerType(), False),
-            T.StructField("repetition", T.IntegerType(), False),
-        ]
+        keys = [T.StructField(k, t, False) for k, t in zip(
+            REPETITION_KEYS,
+            (T.StringType(), T.IntegerType(), T.IntegerType()))]
         return T.StructType(keys + [m.spark_field() for m in self.mappings])
 
 
@@ -126,7 +154,7 @@ def read_h5_value(tree, path: str, kind: str):
         if kind == "float_array":
             import numpy as np
 
-            return [float(x) for x in np.asarray(value, dtype="float64").ravel()]
+            return np.asarray(value, dtype="float64").ravel().tolist()
         raise ValueError(f"unknown kind {kind!r}")
     except (KeyError, TypeError, ValueError, IndexError):
         return {"float": 0.0, "string": "", "float_array": None}[kind]
@@ -234,35 +262,53 @@ def flatten_tree(tree, schema: IngestSchema,
     return row
 
 
-def ingest_hdf5(manifest: DataFrame, schema: IngestSchema,
-                path_col: str = "path") -> DataFrame:
+def repetition_keys(path: str) -> dict:
+    """(ymd, batch, repetition) from the trailing
+    ``{ymd}_{batch}_{repetition}`` of the file stem, like the
+    reference's directory naming (src/YMD_class.py:33-44); a stem
+    without one gets ``("", -1, -1)``."""
+    stem = os.path.splitext(os.path.basename(path))[0]
+    m = _STEM_KEYS.search(stem)
+    values = ((m.group(1), int(m.group(2)), int(m.group(3))) if m
+              else ("", -1, -1))
+    return dict(zip(REPETITION_KEYS, values))
+
+
+def read_repetition(path: str, schema: IngestSchema,
+                    keys: Mapping[str, object] | None = None) -> dict:
+    """One repetition file → one flat row: open (:func:`open_h5`),
+    :func:`flatten_tree`, close. Every front-end reads files through
+    here. ``keys`` default to :func:`repetition_keys` of ``path``."""
+    with open_h5(path) as tree:
+        return flatten_tree(
+            tree, schema, repetition_keys(path) if keys is None else keys)
+
+
+def ingest_hdf5(manifest: DataFrame, schema: IngestSchema) -> DataFrame:
     """S3–S5/S8/S9 — distributed HDF5 → columnar flattening.
 
-    ``mapInPandas`` over the manifest: each task opens its files with
-    h5py and yields flat rows. Output lands as ordinary columns, so all
+    ``mapInPandas`` over the manifest's ``path`` and key columns (e.g.
+    ``extract_keys(scan_files(...))``, whose ``file:`` paths open as
+    they are): each task reads its files with :func:`read_repetition`
+    and yields flat rows. Output lands as ordinary columns, so all
     downstream steps are pure Catalyst expressions and Parquet gets
     column pruning + predicate pushdown that the reference's HDF5 reads
     could never have.
-
-    Files open via :func:`open_h5`: h5py at executor runtime when
-    installed, else the vendored classic-format reader — so real
-    ``.h5`` bytes flow end-to-end even in h5py-less environments.
     """
     out_schema = schema.spark_schema()
-    key_cols = list(schema.key_columns)
-    cols = [path_col, *key_cols]
+    names = [f.name for f in out_schema]
 
-    def read_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read_partition(batches: Iterator[pd.DataFrame]
+                       ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                rec = rec._asdict()
-                with open_h5(rec[path_col]) as f:
-                    rows.append(flatten_tree(
-                        f, schema, {k: rec[k] for k in key_cols}))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
+            yield pd.DataFrame([
+                read_repetition(path, schema,
+                                dict(zip(REPETITION_KEYS, keys)))
+                for path, *keys in pdf.itertuples(index=False)],
+                columns=names)
 
-    return manifest.select(*cols).mapInPandas(read_partition, out_schema)
+    return manifest.select("path", *REPETITION_KEYS).mapInPandas(
+        read_partition, out_schema)
 
 
 # The canonical MOUSE per-repetition schema: the paths every step reads

@@ -16,13 +16,10 @@ task, so ingestion parallelism equals file count (matching the
 reference's per-repetition unit of work) and scales with the cluster,
 not the driver. The driver only globs the listing.
 
-File formats: ``.h5``/``.nxs`` via h5py when installed, else the
-vendored classic-format reader (``sources/minihdf5.py``) — real HDF5
-bytes work everywhere; ``.json`` trees (nested dicts, the same fake
-accepted by ``hdf5.read_h5_value``) remain supported for logic
-fixtures. Keys (ymd, batch, repetition) parse from the
-``{ymd}_{batch}_{repetition}`` stem, like the reference's directory
-naming (src/YMD_class.py:33-44).
+Files are read by ``hdf5.read_repetition``, the same open -> flatten
+path ``ingest_hdf5`` uses: ``.h5``/``.nxs`` via h5py or the vendored
+classic-format reader, ``.json`` dict trees for logic fixtures, keys
+(ymd, batch, repetition) from the ``{ymd}_{batch}_{repetition}`` stem.
 """
 
 from __future__ import annotations
@@ -30,7 +27,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import re
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -44,31 +40,8 @@ from mousedatapipeline_spark.sources.hdf5 import (
     MOUSE_SCHEMA,
     HDF5Mapping,
     IngestSchema,
-    flatten_tree,
+    read_repetition,
 )
-
-_STEM_RE = re.compile(r"(\d{8})_(\d+)_(\d+)$")
-
-
-def _parse_keys(path: str) -> dict:
-    stem = os.path.splitext(os.path.basename(path))[0]
-    # Tolerate prefixes like MOUSE_20240101_2_3 — match the trailing
-    # ymd_batch_repetition triple.
-    m = _STEM_RE.search(stem)
-    if not m:
-        return {"ymd": "", "batch": -1, "repetition": -1}
-    return {"ymd": m.group(1), "batch": int(m.group(2)),
-            "repetition": int(m.group(3))}
-
-
-def _load_tree(path: str):
-    if path.endswith(".json"):
-        with open(path, encoding="utf-8") as f:
-            return json.load(f)
-    # Real HDF5 bytes: h5py when installed, the vendored classic-format
-    # reader otherwise (sources/minihdf5.py).
-    from mousedatapipeline_spark.sources.hdf5 import open_h5
-    return open_h5(path)
 
 
 def _plain_schema(schema: IngestSchema):
@@ -110,35 +83,42 @@ def _schema_from_options(options) -> IngestSchema:
     return IngestSchema(mappings=mappings)
 
 
-class NexusReader(DataSourceReader):
+class _RepetitionFiles:
+    """What both readers share: the ``path``/``glob`` listing and the
+    row per file, in the order of the RESOLVED read schema Spark hands
+    the source (a user-supplied .schema(...) prunes/reorders; unknown
+    fields degrade to NULL)."""
+
     def __init__(self, schema: IngestSchema, fields: Sequence[str],
                  options):
         self._schema = schema
-        # Yield order follows the RESOLVED read schema Spark hands the
-        # source (a user-supplied .schema(...) prunes/reorders); values
-        # come from the ingest mapping, unknown fields degrade to NULL.
         self._fields = list(fields)
         root = options.get("path")
         if not root:
             raise ValueError("nexus source requires .option('path', dir)")
-        pattern = options.get("glob", "*.json")
-        self._files: Sequence[str] = sorted(
-            glob.glob(os.path.join(root, pattern)))
+        self._pattern = os.path.join(root, options.get("glob", "*.json"))
+
+    def _listing(self) -> list[str]:
+        return sorted(glob.glob(self._pattern))
+
+    def _rows(self, files: Sequence[str]) -> Iterator[tuple]:
+        for path in files:
+            row = read_repetition(path, self._schema)
+            yield tuple(row.get(name) for name in self._fields)
+
+
+class NexusReader(_RepetitionFiles, DataSourceReader):
+    def __init__(self, schema: IngestSchema, fields: Sequence[str],
+                 options):
+        super().__init__(schema, fields, options)
+        self._files = self._listing()
 
     def partitions(self) -> Sequence[InputPartition]:
         # One file per partition: task parallelism == file count.
         return [InputPartition(f) for f in self._files]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        path = partition.value
-        tree = _load_tree(path)
-        try:
-            row = flatten_tree(tree, self._schema, _parse_keys(path))
-        finally:
-            close = getattr(tree, "close", None)
-            if close:
-                close()
-        yield tuple(row.get(name) for name in self._fields)
+        return self._rows([partition.value])
 
 
 class NexusDataSource(DataSource):
@@ -159,7 +139,7 @@ class NexusDataSource(DataSource):
                                  self.options)
 
 
-class NexusStreamReader(SimpleDataSourceStreamReader):
+class NexusStreamReader(_RepetitionFiles, SimpleDataSourceStreamReader):
     """W1 as a pluggable stream: each micro-batch picks up repetition
     files that appeared since the last offset.
 
@@ -183,45 +163,37 @@ class NexusStreamReader(SimpleDataSourceStreamReader):
     of unrelated ranges.
     """
 
-    def __init__(self, schema: IngestSchema, fields: Sequence[str],
-                 options):
-        self._schema = schema
-        self._fields = list(fields)  # resolved read-schema order
-        self._root = options.get("path")
-        if not self._root:
-            raise ValueError("nexus source requires .option('path', dir)")
-        self._glob = options.get("glob", "*.json")
-
-    def _listing(self) -> list[str]:
-        return sorted(glob.glob(os.path.join(self._root, self._glob)))
-
     def initialOffset(self) -> dict:
         return {"hwm": -1, "frontier": []}
 
-    def _fresh(self, offset: dict) -> list[str]:
-        """Files fresh relative to ``offset``, with their mtimes."""
-        if "processed" in offset:  # legacy full-manifest offset
-            done = set(offset.get("processed", []))
-            return [f for f in self._listing() if f not in done]
+    def _fresh(self, offset: dict) -> dict[str, int]:
+        """Files fresh relative to ``offset``, mapped to their mtimes.
+        This is a trigger's only stat of each file: ``read`` builds the
+        next offset from these mtimes, and a file that vanished before
+        its stat is skipped."""
+        done = set(offset.get("processed", []))
         hwm = offset.get("hwm", -1)
         frontier = set(offset.get("frontier", []))
-        out = []
+        out = {}
         for f in self._listing():
             try:
                 m = os.stat(f).st_mtime_ns
             except OSError:
                 continue  # vanished between glob and stat
-            if m > hwm or (m == hwm and f not in frontier):
-                out.append(f)
+            if "processed" in offset:  # legacy full-manifest offset
+                is_fresh = f not in done
+            else:
+                is_fresh = m > hwm or (m == hwm and f not in frontier)
+            if is_fresh:
+                out[f] = m
         return out
 
     def read(self, start: dict):
         fresh = self._fresh(start)
         if not fresh:
             return iter([]), dict(start)
-        mtimes = {f: os.stat(f).st_mtime_ns for f in fresh}
-        hwm = max(mtimes.values())
-        frontier = sorted(f for f, m in mtimes.items() if m == hwm)
+        hwm = max(fresh.values())
+        frontier = sorted(f for f, m in fresh.items() if m == hwm)
         if start.get("hwm") == hwm:  # same-mtime files across batches
             frontier = sorted(set(frontier)
                               | set(start.get("frontier", [])))
@@ -236,14 +208,3 @@ class NexusStreamReader(SimpleDataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass  # offsets are self-contained; nothing external to ack
-
-    def _rows(self, files):
-        for path in files:
-            tree = _load_tree(path)
-            try:
-                row = flatten_tree(tree, self._schema, _parse_keys(path))
-            finally:
-                close = getattr(tree, "close", None)
-                if close:
-                    close()
-            yield tuple(row.get(name) for name in self._fields)

@@ -23,8 +23,9 @@ reference's "streaming" is ingestion-triggered batch, and stateless
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -32,6 +33,10 @@ from pyspark.sql.streaming import StreamingQuery
 from mousedatapipeline_spark.sources.manifest import REPETITION_KEYS
 
 PipelineFn = Callable[[DataFrame], DataFrame]
+
+# Reading a sink that has no rows yet: the directory is missing, or it
+# exists with no data files. Any other failure (a corrupt sink) raises.
+_EMPTY_SINK = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def stream_manifest(spark: SparkSession, root: str, schema,
@@ -55,11 +60,15 @@ def dedupe_against_sink(batch: DataFrame, sink_path: str,
                         keys: Sequence[str] = REPETITION_KEYS) -> DataFrame:
     """W3 — idempotence: drop rows whose key is already in the sink
     (the `already_processed` check, src/watcher.py:34-36, as a
-    left-anti join instead of a filesystem stat)."""
+    left-anti join instead of a filesystem stat). A sink with no rows
+    yet passes the batch through; an unreadable sink raises, because
+    skipping the join would append repetitions again."""
     spark = batch.sparkSession
     try:
         existing = spark.read.parquet(sink_path).select(*keys)
-    except Exception:  # noqa: BLE001 - first batch: sink does not exist yet
+    except AnalysisException as e:
+        if e.getCondition() not in _EMPTY_SINK:
+            raise
         return batch
     return batch.join(existing.dropDuplicates(list(keys)),
                       list(keys), "left_anti")

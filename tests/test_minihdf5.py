@@ -207,6 +207,42 @@ def test_ingest_hdf5_spark_end_to_end(spark, tmp_path):
                for g in got)
 
 
+def test_ingest_hdf5_reads_scan_files_listing(spark, tmp_path):
+    """The batch seam with no path adapter: ``binaryFile`` lists
+    ``file:`` paths (a directory name with a space stays unencoded),
+    and ``ingest_hdf5`` opens them as they are."""
+    from mousedatapipeline_spark.sources.manifest import (
+        extract_keys,
+        scan_files,
+    )
+    reps = {"2024/20240101/20240101_2_1": 0.6,
+            "2024/20240101/20240101_2_2": 0.7,
+            "beam time/20240102_3_1": 0.8}
+    for rel, transmission in reps.items():
+        (tmp_path / rel).mkdir(parents=True)
+        spec = dict(GOLDEN_SPEC)
+        spec["/entry/sample/transmission"] = transmission
+        write_hdf5(str(tmp_path / rel / "im_craw.nxs"), spec)
+    files = extract_keys(scan_files(spark, str(tmp_path)))
+    assert all(r["path"].startswith("file:") for r in files.collect())
+    got = {(r["ymd"], r["batch"], r["repetition"]): r for r in
+           ingest_hdf5(files, MOUSE_SCHEMA).collect()}
+    assert {k: r["transmission"] for k, r in got.items()} == {
+        ("20240101", 2, 1): 0.6, ("20240101", 2, 2): 0.7,
+        ("20240102", 3, 1): 0.8}
+    assert all(r["detector_data"] == [10.0, 20.0, 30.0, 40.0, 50.0, 60.0]
+               for r in got.values())
+
+
+def test_open_h5_accepts_only_local_and_file_paths():
+    with open_h5(f"file:{FIXTURE}") as f:
+        assert float(f["entry"]["sample"]["transmission"][()]) == 0.7
+    for uri in ("hdfs://namenode:8020/data/im_craw.nxs",
+                "s3a://bucket/data/im_craw.nxs"):
+        with pytest.raises(ValueError, match="file: paths"):
+            open_h5(uri)
+
+
 def test_nexus_datasource_reads_real_h5(spark, tmp_path):
     """S15/S1: the DataSource-V2 face over real .h5 bytes — one input
     partition per file, keys parsed from the filename stem."""

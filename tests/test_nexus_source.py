@@ -5,13 +5,18 @@ degradation contract shared with hdf5.read_h5_value."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
+from mousedatapipeline_spark.sources.hdf5 import (
+    MOUSE_SCHEMA,
+    repetition_keys,
+)
 from mousedatapipeline_spark.sources.nexus_source import (
     NexusDataSource,
     NexusReader,
-    _parse_keys,
+    NexusStreamReader,
 )
 
 
@@ -83,10 +88,10 @@ def test_custom_mapping_option(spark, landing):
 
 
 def test_key_parse_tolerates_prefix_and_garbage():
-    assert _parse_keys("/x/MOUSE_20240101_2_3.nxs") == {
+    assert repetition_keys("/x/MOUSE_20240101_2_3.nxs") == {
         "ymd": "20240101", "batch": 2, "repetition": 3}
-    assert _parse_keys("/x/20240101_12_0.json")["batch"] == 12
-    assert _parse_keys("/x/not_a_key.json")["batch"] == -1
+    assert repetition_keys("/x/20240101_12_0.json")["batch"] == 12
+    assert repetition_keys("/x/not_a_key.json")["batch"] == -1
 
 
 def test_stream_reader_incremental_batches(spark, landing, tmp_path):
@@ -193,6 +198,29 @@ def test_stream_offsets_are_compact_high_water_marks(landing):
     assert len(list(rows_l)) == 1
 
 
+def test_stream_read_stats_each_file_once(landing, monkeypatch):
+    """A trigger uses the mtimes its freshness check read: a file whose
+    later stat would fail (gone between listing and read) must not fail
+    the trigger with an unguarded second stat."""
+    r = NexusStreamReader(MOUSE_SCHEMA, ["ymd", "batch", "repetition"],
+                          {"path": str(landing)})
+    victim = r._listing()[0]
+    real_stat = os.stat
+    calls = []
+
+    def stat(path, *args, **kwargs):
+        if os.fspath(path) == victim:
+            calls.append(path)
+            if len(calls) > 1:
+                raise FileNotFoundError(victim)
+        return real_stat(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "stat", stat)
+    rows, end = r.read(r.initialOffset())
+    assert len(list(rows)) == 3
+    assert len(calls) == 1 and end["hwm"] >= 0
+
+
 def test_h5py_round_trip_matches_dict_tree():
     """Real-HDF5 parity: the h5py branch of read_h5_value/flatten_tree
     must produce the same row as the dict-tree fake. Skips in this
@@ -214,7 +242,7 @@ def test_h5py_round_trip_matches_dict_tree():
             f["/entry/sample/mu"] = 10.0
             f["/entry/sample/name"] = "demo"
             f["/entry/collection_identifier"] = "20240101_2"
-        keys = _parse_keys(path)
+        keys = repetition_keys(path)
         with h5py.File(path, "r") as f:
             via_h5 = flatten_tree(f, MOUSE_SCHEMA, keys)
     via_dict = flatten_tree(TREE, MOUSE_SCHEMA, keys)

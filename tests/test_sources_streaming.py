@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from mousedatapipeline_spark.sources import hdf5, manifest, sinks
@@ -75,6 +77,13 @@ def test_hdf5_defensive_coercions():
     assert hdf5.read_h5_value(tree, "/entry/img", "float_array") == [
         1.0, 2.0, 3.0, 4.0]
     assert hdf5.read_h5_value(tree, "/entry/missing", "float_array") is None
+    # Detector counts (integer dtype) come back as the same Python
+    # floats the per-element conversion gives.
+    counts = np.random.default_rng(0).integers(
+        0, 2**32 - 1, size=(7, 5), dtype=np.uint32)
+    got = hdf5.read_h5_value({"img": counts}, "/img", "float_array")
+    assert got == [float(x) for x in counts.ravel()]
+    assert all(type(x) is float for x in got)
 
 
 def test_hdf5_flatten_tree_and_schema():
@@ -147,6 +156,24 @@ def test_streaming_watcher_end_to_end(tmp_path, spark):
         pipeline, sink, ckpt2, available_now=True)
     q2.awaitTermination(60)
     assert spark.read.parquet(sink).count() == 2
+
+
+def test_dedupe_against_sink_raises_on_corrupt_sink(tmp_path, spark):
+    """Only a sink with no rows yet (missing, or an empty directory)
+    passes the batch through; an unreadable sink must raise instead of
+    silently turning the anti-join off and appending the batch again."""
+    batch = spark.createDataFrame(
+        [("20240101", 1, 1)], "ymd string, batch int, repetition int")
+    missing = tmp_path / "missing"
+    assert watcher.dedupe_against_sink(batch, str(missing)).count() == 1
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert watcher.dedupe_against_sink(batch, str(empty)).count() == 1
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        watcher.dedupe_against_sink(batch, str(corrupt))
 
 
 def test_windowed_event_counts_batch_semantics(spark):
